@@ -1,4 +1,4 @@
-"""From-scratch Avro Object Container File (OCF) codec — stdlib only.
+"""From-scratch Avro Object Container File (OCF) codec.
 
 Implements the Avro 1.x spec subset that covers tabular interchange:
 record schemas over null / boolean / int / long / float / double /
@@ -6,12 +6,10 @@ string / bytes (including ["null", T] unions — how nullable columns are
 spelled in Avro), zigzag-varint integers, little-endian IEEE floats,
 length-prefixed strings, container framing (Obj\\x01 magic, metadata map
 with the embedded JSON schema, 16-byte sync markers) and ALL six spec
-codecs: null, deflate (raw DEFLATE via stdlib zlib), snappy (each block
-carries the spec's 4-byte big-endian CRC32 of the uncompressed data;
-decode via the from-scratch snappy in parquet_data.py, encode as a
-minimal all-literal snappy stream any conformant decoder reads), bzip2
-and xz (stdlib), and zstandard (decode via the from-scratch RFC 8878
-decoder in zstd.py, encode as store-mode frames).
+codecs: null, deflate (raw DEFLATE), snappy (each block carries the
+spec's 4-byte big-endian CRC32 of the uncompressed data), bzip2, xz and
+zstandard (raw frames).  Blocks decode through operators/codec.py; the
+writer encodes with the stdlib and pyarrow's native codecs.
 
 Reference parity: the reference's arrow-data-source module reads
 columnar interchange formats next to parquet/csv; here the container
@@ -32,6 +30,10 @@ from __future__ import annotations
 import json
 import struct
 import zlib
+
+import pyarrow as pa
+
+from .codec import decompress
 
 __all__ = ["write_avro", "read_avro", "encode_datum", "decode_datum"]
 
@@ -353,30 +355,11 @@ def _field_type(t):
 
 # -- container -----------------------------------------------------------------
 
-
-def _snappy_compress_literal(data: bytes) -> bytes:
-    """Minimal VALID snappy stream: uvarint(total) + all-literal tokens
-    (the compressor side of the fixture story; any conformant decoder —
-    ours or pyarrow's — reads it)."""
-    out = bytearray()
-    n = len(data)
-    v = n
-    while True:  # uvarint total length
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | (0x80 if v else 0))
-        if not v:
-            break
-    pos = 0
-    while pos < n:
-        run = min(n - pos, 65536)
-        if run <= 60:
-            out.append((run - 1) << 2)
-        else:
-            out += bytes([61 << 2, (run - 1) & 0xFF, (run - 1) >> 8])
-        out += data[pos : pos + run]
-        pos += run
-    return bytes(out)
+#: Avro codec name -> codec.decompress name (snappy blocks also carry a
+#: CRC and are handled inline in read_avro)
+_CODECS = {
+    "deflate": "deflate", "bzip2": "bz2", "xz": "xz", "zstandard": "zstd",
+}
 
 
 def write_avro(rows: list[dict], schema: dict, codec: str = "deflate", block_rows: int = 1000) -> bytes:
@@ -410,7 +393,7 @@ def write_avro(rows: list[dict], schema: dict, codec: str = "deflate", block_row
             data = zlib.compress(data, 6)[2:-4]  # raw DEFLATE per spec
         elif codec == "snappy":
             crc = zlib.crc32(data) & 0xFFFFFFFF
-            data = _snappy_compress_literal(data) + crc.to_bytes(4, "big")
+            data = pa.compress(data, "snappy", asbytes=True) + crc.to_bytes(4, "big")
         elif codec == "bzip2":
             import bz2
 
@@ -420,9 +403,7 @@ def write_avro(rows: list[dict], schema: dict, codec: str = "deflate", block_row
 
             data = lzma.compress(data, format=lzma.FORMAT_XZ)
         elif codec == "zstandard":
-            from .zstd import zstd_compress_store
-
-            data = zstd_compress_store(data)
+            data = pa.compress(data, "zstd", asbytes=True)
         out += _zigzag_encode(len(blk)) + _zigzag_encode(len(data)) + data + _SYNC
     return bytes(out)
 
@@ -472,35 +453,17 @@ def read_avro(buf: bytes) -> tuple[dict, list[dict]]:
         if buf[pos : pos + 16] != sync:
             raise ValueError(f"sync marker mismatch at byte {pos}")
         pos += 16
-        if codec == "deflate":
-            data = zlib.decompress(data, -15)
-        elif codec == "snappy":
+        if codec == "snappy":
             if len(data) < 4:
                 raise ValueError(f"snappy block at byte {pos} too short for its CRC")
-            from .parquet_data import snappy_decompress
-
-            payload, crc = data[:-4], int.from_bytes(data[-4:], "big")
-            data = snappy_decompress(payload)
+            data, crc = decompress(data[:-4], "snappy"), int.from_bytes(data[-4:], "big")
             if zlib.crc32(data) & 0xFFFFFFFF != crc:
                 raise ValueError(f"snappy block CRC mismatch at byte {pos}")
-        elif codec == "bzip2":
-            import bz2
-
+        elif codec != "null":
             try:
-                data = bz2.decompress(data)
-            except OSError as ex:
-                raise ValueError(f"bad bzip2 block at byte {pos}: {ex}") from ex
-        elif codec == "xz":
-            import lzma
-
-            try:
-                data = lzma.decompress(data)
-            except lzma.LZMAError as ex:
-                raise ValueError(f"bad xz block at byte {pos}: {ex}") from ex
-        elif codec == "zstandard":
-            from .zstd import zstd_decompress
-
-            data = zstd_decompress(data)
+                data = decompress(data, _CODECS[codec])
+            except ValueError as ex:
+                raise ValueError(f"bad {codec} block at byte {pos}: {ex}") from ex
         dpos = 0
         for _ in range(count):
             row, dpos = _decode_value(data, dpos, schema, named)

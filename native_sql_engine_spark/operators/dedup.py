@@ -26,7 +26,6 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..materialize import materialize, release
-from .text import shingles, tokens
 
 # Mersenne prime + deterministic affine constants for MinHash permutations.
 # 31-bit (not 61-bit) so the affine mulmod is overflow-free in signed 64-bit
@@ -250,14 +249,6 @@ def dedup_clusters(
         )
         .withColumn("is_canonical", (F.col(id_col) == F.col("cluster_id")))
     )
-
-
-def _hashed_shingles(text_col: Column, ngram: int) -> Column:
-    """Distinct word-n-gram shingles hashed to int64 — set semantics are
-    preserved (collision odds ~|set|²/2⁶⁴) while set ops run on fixed-width
-    longs instead of strings.  Column-expression form (interpreted
-    higher-order lambdas) — bulk paths use ``_shingle_base`` instead."""
-    return F.transform(shingles(tokens(text_col), ngram), lambda s: F.xxhash64(s))
 
 
 def _shingle_base(df: DataFrame, id_col: str, text_col: str, ngram: int) -> DataFrame:
@@ -513,27 +504,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .orderBy("a_id", "b_id")
     )
-
-
-def simhash64(tokens_col: Column) -> Column:
-    """64-bit SimHash of a token array as a signed long (column expression).
-
-    Interpreted higher-order folds — ad-hoc/small-array use only; the bulk
-    path in ``simhash_pairs`` uses explode + 64 codegen'd sums."""
-    hashed = F.transform(tokens_col, lambda t: F.xxhash64(t))
-
-    def vote(b: int):
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    out = F.lit(0).cast("long")
-    for b in range(64):
-        votes = F.aggregate(hashed, F.lit(0).cast("long"), vote(b))
-        out = out.bitwiseOR(
-            F.when(votes > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-        )
-    return out
 
 
 def simhash_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""From-scratch ORC file reading — stdlib + repo codecs only.
+"""From-scratch ORC file reading — stdlib + operators/codec.py.
 
 Implements the public ORC v1 specification (orc.apache.org/specification)
 deep enough to read what real writers (pyarrow / ORC-java / Spark) emit
@@ -11,9 +11,9 @@ for flat tabular data:
   encodings) — all via a schema-agnostic protobuf wire-format decoder
   (the ORC sibling of parquet_meta's thrift walker);
 - **compression framing**: ORC chunks each carry a 3-byte little-endian
-  header ``(len << 1) | is_original``; codecs NONE / ZLIB (raw deflate) /
-  SNAPPY / LZ4 (block) / ZSTD route through stdlib zlib and the
-  from-scratch snappy (parquet_data), lz4 and zstd (RFC 8878) decoders;
+  header ``(len << 1) | is_original``; codecs ZLIB (raw deflate) /
+  SNAPPY / LZ4 (raw block) / ZSTD inflate through operators/codec.py
+  (the stdlib for deflate, pyarrow's native codecs for the rest);
 - **run-length codecs**: byte RLE, boolean (bit) RLE, and all four RLEv2
   sub-encodings — SHORT_REPEAT, DIRECT, DELTA (fixed and variable
   width), PATCHED_BASE (sign-magnitude base, patch gap/value ORing) —
@@ -58,7 +58,8 @@ first-class so a lake's ORC files can be verified with zero engine code.
 from __future__ import annotations
 
 import struct
-import zlib
+
+from .codec import decompress
 
 __all__ = ["read_orc_column", "read_orc_table", "orc_metadata"]
 
@@ -181,22 +182,14 @@ def _repeated_uints(msg: dict, field: int) -> list[int]:
 # -- compression framing ---------------------------------------------------------------
 
 
+#: ORC CompressionKind -> codec.decompress name (3 = LZO stays gated)
+_CODECS = {1: "deflate", 2: "snappy", 4: "lz4_raw", 5: "zstd"}
+
+
 def _inflate(raw: bytes, codec: int) -> bytes:
-    if codec == 1:  # ZLIB: raw deflate
-        return zlib.decompress(raw, -15)
-    if codec == 2:
-        from .parquet_data import snappy_decompress
-
-        return snappy_decompress(raw)
-    if codec == 4:
-        from .lz4 import lz4_block_decompress
-
-        return lz4_block_decompress(raw)
-    if codec == 5:
-        from .zstd import zstd_decompress
-
-        return zstd_decompress(raw)
-    raise NotImplementedError(f"ORC compression kind {codec} not supported (LZO)")
+    if codec not in _CODECS:
+        raise NotImplementedError(f"ORC compression kind {codec} not supported (LZO)")
+    return decompress(raw, _CODECS[codec])
 
 
 def _decompress_stream(buf: bytes, codec: int) -> bytes:

@@ -1,15 +1,10 @@
-"""From-scratch Parquet Modular Encryption reading — stdlib only.
+"""Parquet Modular Encryption reading.
 
 Implements the read side of the parquet-format encryption spec
-(Encryption.md) on top of a from-scratch AES-GCM:
+(Encryption.md).  The ciphers themselves — AES-GCM and AES-CTR — run on
+``cryptography`` through operators/codec.py; this module does the
+parquet part:
 
-- **AES** (FIPS-197) encrypt direction for 128/192/256-bit keys — S-box
-  derived algebraically (GF(2^8) inverse + affine transform, generator 3
-  exp/log tables), standard key expansion, per-round SubBytes/ShiftRows/
-  MixColumns (pinned against the FIPS-197 appendix vector);
-- **GCM** (NIST SP 800-38D): GHASH over GF(2^128) with the reflected
-  reduction polynomial, 12-byte-IV J0 construction, CTR keystream,
-  constant tag comparison (pinned against the NIST zero-key vectors);
 - **encrypted module framing**: ``len(4 LE) || nonce(12) || ciphertext
   || tag(16)``, with the spec's module AAD — ``aad_prefix ||
   aad_file_unique || module_type(1) [|| row_group(2 LE) || column(2 LE)
@@ -20,8 +15,8 @@ Implements the read side of the parquet-format encryption spec
   ``FileCryptoMetaData`` walk, footer module decryption, per-column
   crypto metadata (footer key vs column keys), encrypted ColumnMetaData,
   and encrypted page-header + page modules (dictionary and data pages);
-  plaintext-footer mode (``PAR1`` with encrypted columns) rides the same
-  machinery.
+  plaintext-footer mode (``PAR1`` with encrypted columns, footer signed
+  with a GCM tag) rides the same machinery.
 
 Key management stays external, as the spec intends: callers hand
 ``read_column`` raw AES keys (footer + per-column) or a
@@ -46,166 +41,14 @@ from __future__ import annotations
 import hmac
 import struct
 
+from .codec import ctr_decrypt, gcm_decrypt, gcm_encrypt
+
 __all__ = [
-    "aes_gcm_decrypt",
-    "aes_gcm_encrypt",
     "decrypt_module",
     "module_aad",
     "read_encrypted_column",
     "read_encrypted_table",
 ]
-
-
-# -- AES (FIPS-197), encrypt direction --------------------------------------------
-
-def _build_sbox() -> bytes:
-    # exp/log tables over GF(2^8) with generator 3
-    exp = [0] * 256
-    log = [0] * 256
-    x = 1
-    for i in range(255):
-        exp[i] = x
-        log[x] = i
-        x ^= ((x << 1) ^ (0x1B if x & 0x80 else 0)) & 0xFF  # x *= 3
-    sbox = bytearray(256)
-    for a in range(256):
-        b = exp[(255 - log[a]) % 255] if a else 0  # multiplicative inverse
-        s = b
-        for r in (1, 2, 3, 4):  # affine transform
-            s ^= ((b << r) | (b >> (8 - r))) & 0xFF
-        sbox[a] = s ^ 0x63
-    return bytes(sbox)
-
-
-_SBOX = _build_sbox()
-assert _SBOX[0] == 0x63 and _SBOX[1] == 0x7C and _SBOX[0x53] == 0xED
-
-
-def _xtime(a: int) -> int:
-    return ((a << 1) ^ (0x1B if a & 0x80 else 0)) & 0xFF
-
-
-def _expand_key(key: bytes) -> list[list[int]]:
-    """Round keys as lists of 16 bytes (column-major AES state order)."""
-    nk = len(key) // 4
-    if nk not in (4, 6, 8):
-        raise ValueError(f"AES key must be 16/24/32 bytes, got {len(key)}")
-    nr = nk + 6
-    words = [list(key[4 * i : 4 * i + 4]) for i in range(nk)]
-    rcon = 1
-    for i in range(nk, 4 * (nr + 1)):
-        t = list(words[i - 1])
-        if i % nk == 0:
-            t = t[1:] + t[:1]
-            t = [_SBOX[b] for b in t]
-            t[0] ^= rcon
-            rcon = _xtime(rcon)
-        elif nk == 8 and i % nk == 4:
-            t = [_SBOX[b] for b in t]
-        words.append([a ^ b for a, b in zip(words[i - nk], t)])
-    return [
-        [b for w in words[4 * r : 4 * r + 4] for b in w] for r in range(nr + 1)
-    ]
-
-
-_SHIFT = [0, 5, 10, 15, 4, 9, 14, 3, 8, 13, 2, 7, 12, 1, 6, 11]
-
-
-def _encrypt_block(rk: list[list[int]], block: bytes) -> bytes:
-    s = [b ^ k for b, k in zip(block, rk[0])]
-    nr = len(rk) - 1
-    for rnd in range(1, nr):
-        # SubBytes + ShiftRows
-        t = [_SBOX[s[_SHIFT[i]]] for i in range(16)]
-        # MixColumns + AddRoundKey
-        k = rk[rnd]
-        s = [0] * 16
-        for c in range(0, 16, 4):
-            a0, a1, a2, a3 = t[c], t[c + 1], t[c + 2], t[c + 3]
-            x = a0 ^ a1 ^ a2 ^ a3
-            s[c] = a0 ^ x ^ _xtime(a0 ^ a1) ^ k[c]
-            s[c + 1] = a1 ^ x ^ _xtime(a1 ^ a2) ^ k[c + 1]
-            s[c + 2] = a2 ^ x ^ _xtime(a2 ^ a3) ^ k[c + 2]
-            s[c + 3] = a3 ^ x ^ _xtime(a3 ^ a0) ^ k[c + 3]
-    t = [_SBOX[s[_SHIFT[i]]] for i in range(16)]
-    return bytes(b ^ k for b, k in zip(t, rk[nr]))
-
-
-# -- GCM (NIST SP 800-38D) ---------------------------------------------------------
-
-_R = 0xE1 << 120
-
-
-def _gf_mult(x: int, y: int) -> int:
-    """GF(2^128) multiply in GCM's reflected bit order (blocks as
-    big-endian 128-bit ints)."""
-    z = 0
-    v = x
-    for i in range(127, -1, -1):
-        if (y >> i) & 1:
-            z ^= v
-        v = (v >> 1) ^ (_R if v & 1 else 0)
-    return z
-
-
-def _ghash(h: int, aad: bytes, ct: bytes) -> int:
-    y = 0
-    for chunk in (aad, ct):
-        for i in range(0, len(chunk), 16):
-            blk = chunk[i : i + 16]
-            if len(blk) < 16:
-                blk = blk + bytes(16 - len(blk))
-            y = _gf_mult(y ^ int.from_bytes(blk, "big"), h)
-    lens = (len(aad) * 8) << 64 | (len(ct) * 8)
-    return _gf_mult(y ^ lens, h)
-
-
-def _ctr_stream(rk: list[list[int]], j0: int, n: int) -> bytes:
-    out = bytearray()
-    ctr = j0
-    for _ in range((n + 15) // 16):
-        ctr = (ctr & ~0xFFFFFFFF) | ((ctr + 1) & 0xFFFFFFFF)  # inc32
-        out += _encrypt_block(rk, ctr.to_bytes(16, "big"))
-    return bytes(out[:n])
-
-
-def aes_gcm_decrypt(key: bytes, nonce: bytes, ct: bytes, tag: bytes, aad: bytes = b"") -> bytes:
-    """AES-GCM decrypt + authenticate (12-byte nonce, 16-byte tag)."""
-    if len(nonce) != 12 or len(tag) != 16:
-        raise ValueError("GCM needs a 12-byte nonce and 16-byte tag")
-    rk = _expand_key(key)
-    h = int.from_bytes(_encrypt_block(rk, bytes(16)), "big")
-    j0 = int.from_bytes(nonce + b"\x00\x00\x00\x01", "big")
-    s = _ghash(h, aad, ct)
-    want = (int.from_bytes(_encrypt_block(rk, j0.to_bytes(16, "big")), "big") ^ s).to_bytes(16, "big")
-    if not hmac.compare_digest(want, tag):
-        raise ValueError("GCM tag mismatch (wrong key, tampered data, or wrong AAD)")
-    return bytes(a ^ b for a, b in zip(ct, _ctr_stream(rk, j0, len(ct))))
-
-
-def aes_ctr_decrypt(key: bytes, nonce: bytes, ct: bytes) -> bytes:
-    """AES-CTR decrypt for AES_GCM_CTR_V1 page modules: the initial
-    counter block is the 12-byte nonce + a 4-byte counter equal to 1
-    (Encryption.md), and decryption starts AT that block — unlike GCM,
-    where block 1 is reserved for the tag and the keystream starts at 2."""
-    if len(nonce) != 12:
-        raise ValueError("CTR needs a 12-byte nonce")
-    rk = _expand_key(key)
-    # _ctr_stream pre-increments, so seed it one below the initial counter
-    j0_minus_1 = int.from_bytes(nonce + b"\x00\x00\x00\x00", "big")
-    return bytes(a ^ b for a, b in zip(ct, _ctr_stream(rk, j0_minus_1, len(ct))))
-
-
-def aes_gcm_encrypt(key: bytes, nonce: bytes, pt: bytes, aad: bytes = b"") -> tuple[bytes, bytes]:
-    """AES-GCM encrypt; returns (ciphertext, tag).  (Test/fixture helper —
-    the parquet read path never encrypts.)"""
-    rk = _expand_key(key)
-    h = int.from_bytes(_encrypt_block(rk, bytes(16)), "big")
-    j0 = int.from_bytes(nonce + b"\x00\x00\x00\x01", "big")
-    ct = bytes(a ^ b for a, b in zip(pt, _ctr_stream(rk, j0, len(pt))))
-    s = _ghash(h, aad, ct)
-    tag = (int.from_bytes(_encrypt_block(rk, j0.to_bytes(16, "big")), "big") ^ s).to_bytes(16, "big")
-    return ct, tag
 
 
 # -- parquet encrypted modules -------------------------------------------------------
@@ -248,7 +91,7 @@ def decrypt_module(buf: bytes, pos: int, key: bytes, aad: bytes) -> tuple[bytes,
     ct = buf[start + 12 : end - 16]
     tag = buf[end - 16 : end]
     try:
-        return aes_gcm_decrypt(key, nonce, ct, tag, aad), end
+        return gcm_decrypt(key, nonce, ct, tag, aad), end
     except ValueError as exc:
         raise ValueError(f"module at byte {pos}: {exc}") from exc
 
@@ -265,7 +108,7 @@ def decrypt_ctr_module(buf: bytes, pos: int, key: bytes) -> tuple[bytes, int]:
     end = start + mlen
     if mlen < 12 or end > len(buf):
         raise ValueError(f"encrypted module at byte {pos} overruns the buffer")
-    return aes_ctr_decrypt(key, buf[start : start + 12], buf[start + 12 : end]), end
+    return ctr_decrypt(key, buf[start : start + 12], buf[start + 12 : end]), end
 
 
 class FileCrypto:
@@ -381,10 +224,10 @@ def _file_crypto(buf: bytes, footer_key, column_keys, key_unwrapper, aad_prefix)
                 f"plaintext footer signature is {len(sig)} bytes, want 28"
             )
         aad = module_aad(crypto.aad_prefix, crypto.aad_file_unique, FOOTER)
-        _, tag = aes_gcm_encrypt(
+        _, tag = gcm_encrypt(
             crypto.footer_key, sig[:12], buf[tail_start:meta_end], aad
         )
-        if tag != sig[12:]:
+        if not hmac.compare_digest(tag, sig[12:]):
             raise ValueError("plaintext footer signature mismatch (tampered footer?)")
     return meta, crypto
 
@@ -544,7 +387,7 @@ def write_encrypted_parquet(
     def module(pt: bytes, key: bytes, aad: bytes) -> bytes:
         nonce_ctr[0] += 1
         nonce = nonce_ctr[0].to_bytes(12, "big")
-        ct, tag = aes_gcm_encrypt(key, nonce, pt, aad)
+        ct, tag = gcm_encrypt(key, nonce, pt, aad)
         body = nonce + ct + tag
         return struct.pack("<I", len(body)) + body
 

@@ -1,11 +1,9 @@
 """From-scratch Parquet DATA reading — column chunks to Python values.
 
 Builds on the footer walk in parquet_meta.py and goes all the way down
-the storage stack, stdlib + numpy only:
+the storage stack in Python, with page decompression handed to
+operators/codec.py (pyarrow's native codecs and the stdlib):
 
-- **Snappy** block decompression (tag stream: literals + three copy
-  forms with overlapping-copy semantics) — the codec the driver
-  testdata is written with;
 - Thrift ``PageHeader`` / ``DataPageHeader`` / ``DictionaryPageHeader``
   decode (via the generic compact-protocol decoder);
 - the **RLE/bit-packed hybrid** (definition levels and dictionary
@@ -35,13 +33,13 @@ the storage stack, stdlib + numpy only:
   the layout (pyarrow/DuckDB/Spark all pick INT/FLBA).
 
 Honest gates: repeated (nested/list) columns beyond the 3-level LIST
-shape and codecs beyond snappy/uncompressed/gzip/brotli/lz4/zstd (brotli,
-lz4 and zstd via the from-scratch decoders in
-operators/{brotli,lz4,zstd}.py; LZO remains gated — no fixture tool in
-the container) raise ``NotImplementedError``.  Modular-encryption files (``PARE`` magic or
+shape and codecs beyond uncompressed/snappy/gzip/brotli/lz4/lz4_raw/zstd
+(all inflated by operators/codec.py against the page header's declared
+size; LZO remains gated — no fixture tool in the container) raise
+``NotImplementedError``.  Modular-encryption files (``PARE`` magic or
 signed plaintext footers) read through
-``operators/parquet_crypto.read_encrypted_column`` (from-scratch
-AES-GCM); this module handles only plaintext payloads.  Scope is
+``operators/parquet_crypto.read_encrypted_column``; this module handles
+only plaintext payloads.  Scope is
 deliberate: this is the verification path (read a column with zero
 engine code and cross-check the engine's own scan), not a replacement
 for Spark's vectorized reader.
@@ -52,12 +50,13 @@ from __future__ import annotations
 import struct
 import zlib
 
+from .codec import decompress
 from .parquet_meta import thrift_compact_decode
 
-__all__ = ["snappy_decompress", "read_column", "read_table"]
+__all__ = ["read_column", "read_table"]
 
 
-# -- Snappy --------------------------------------------------------------------
+# -- varints -------------------------------------------------------------------
 
 
 def _uvarint(buf: bytes, pos: int) -> tuple[int, int]:
@@ -71,53 +70,6 @@ def _uvarint(buf: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             return v, pos
         shift += 7
-
-
-def snappy_decompress(buf: bytes) -> bytes:
-    """Decode a raw Snappy block (the parquet page codec)."""
-    total, pos = _uvarint(buf, 0)
-    out = bytearray()
-    n = len(buf)
-    while pos < n:
-        tag = buf[pos]
-        pos += 1
-        t = tag & 3
-        if t == 0:  # literal
-            base = tag >> 2
-            if base >= 60:
-                nb = base - 59
-                ln = int.from_bytes(buf[pos : pos + nb], "little") + 1
-                pos += nb
-            else:
-                ln = base + 1
-            if pos + ln > n:
-                raise ValueError(f"snappy literal overruns input at byte {pos}")
-            out += buf[pos : pos + ln]
-            pos += ln
-            continue
-        if t == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 0x7) + 4
-            off = ((tag >> 5) << 8) | buf[pos]
-            pos += 1
-        elif t == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(buf[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(buf[pos : pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError(f"snappy copy offset {off} out of range at byte {pos}")
-        if off >= ln:  # fast path: non-overlapping
-            start = len(out) - off
-            out += out[start : start + ln]
-        else:  # overlapping copy repeats recent bytes
-            for _ in range(ln):
-                out.append(out[-off])
-    if len(out) != total:
-        raise ValueError(f"snappy length mismatch: got {len(out)}, header says {total}")
-    return bytes(out)
 
 
 # -- RLE / bit-packed hybrid -----------------------------------------------------
@@ -567,12 +519,12 @@ def _decode_pages(
             ) from None
         page_type = hdr.get(1)
         if page_type == 2:  # DICTIONARY_PAGE
-            data = _decompress(raw, codec)
+            data = _decompress(raw, codec, hdr.get(2, -1))
             dph = hdr.get(7, {})
             dictionary, _ = _plain_values(data, 0, ptype, dph.get(1, 0), type_length, binary)
             continue
         if page_type == 0:  # DATA_PAGE (v1): whole page compressed together
-            data = _decompress(raw, codec)
+            data = _decompress(raw, codec, hdr.get(2, -1))
             dp = hdr.get(5, {})
             nv = dp.get(1, 0)
             enc = dp.get(2)
@@ -607,7 +559,7 @@ def _decode_pages(
                 page_defs, _ = _rle_hybrid(raw, rll, max_def.bit_length(), nv)
             body = raw[dll + rll :]
             if dp.get(7, True):  # is_compressed applies to the values only
-                body = _decompress(body, codec)
+                body = _decompress(body, codec, hdr.get(2, -1) - dll - rll)
             n_present = sum(1 for d in page_defs if d == max_def)
             page_vals = _decode_values(
                 body, 0, enc, ptype, n_present, dictionary, type_length, binary
@@ -620,28 +572,15 @@ def _decode_pages(
     return defs[:n_values], reps[:n_values], present
 
 
-def _decompress(raw: bytes, codec: int) -> bytes:
+#: parquet CompressionCodec -> codec.decompress name (3 = LZO stays gated)
+_CODECS = {1: "snappy", 2: "gzip", 4: "brotli", 5: "lz4_hadoop", 6: "zstd", 7: "lz4_raw"}
+
+
+def _decompress(raw: bytes, codec: int, size: int) -> bytes:
+    """Inflate one page body to the ``size`` its header declares."""
     if codec == 0:
         return raw
-    if codec == 1:
-        return snappy_decompress(raw)
-    if codec == 4:  # Brotli (RFC 7932, from-scratch decoder)
-        from .brotli import brotli_decompress
-
-        return brotli_decompress(raw)
-    if codec == 5:  # legacy LZ4: Hadoop framing with bare-block fallback
-        from .lz4 import lz4_hadoop_decompress
-
-        return lz4_hadoop_decompress(raw)
-    if codec == 6:
-        from .zstd import zstd_decompress
-
-        return zstd_decompress(raw)
-    if codec == 7:  # LZ4_RAW
-        from .lz4 import lz4_block_decompress
-
-        return lz4_block_decompress(raw)
-    return zlib.decompress(raw, 31)  # GZIP
+    return decompress(raw, _CODECS[codec], size)
 
 
 def _decode_values(

@@ -471,13 +471,6 @@ def _inv_predictor(argb: np.ndarray, tile_modes: np.ndarray, bits: int) -> np.nd
     return out
 
 
-def _color_delta(t: int, c: int) -> int:
-    """Signed 3.5 fixed-point multiplier applied to an int8-viewed channel."""
-    t_s = t - 256 if t >= 128 else t
-    c_s = c - 256 if c >= 128 else c
-    return (t_s * c_s) >> 5
-
-
 def _inv_color_transform(argb: np.ndarray, tiles: np.ndarray, bits: int) -> np.ndarray:
     # tile ARGB packing (spec): red ch = red_to_blue, green ch =
     # green_to_blue, blue ch = green_to_red.  Fully elementwise (the only

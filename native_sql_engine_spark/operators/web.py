@@ -162,40 +162,32 @@ def decompress_text(
 ) -> DataFrame:
     """Transparent decompression for compressed corpus shards — the other
     ingestion front door next to WARC: gzip (\\x1f\\x8b), bzip2 (BZh),
-    xz (\\xfd7zXZ), zstd (\\x28\\xb5\\x2f\\xfd — the from-scratch RFC 8878
-    decoder in operators/zstd.py), lz4 frames (\\x04\\x22\\x4d\\x18 —
-    operators/lz4.py), raw zlib (\\x78) and plain text, dispatched by
-    magic bytes per row.  Arrow batched.  At 100 TB, compressed shards
-    arrive one per row from a binaryFile scan; decompression is
-    CPU-parallel across rows with zero shuffle."""
-    import bz2
-    import lzma
-    import zlib
-
+    xz (\\xfd7zXZ), zstd (\\x28\\xb5\\x2f\\xfd), lz4 frames
+    (\\x04\\x22\\x4d\\x18), raw zlib (\\x78) and plain text, dispatched by
+    magic bytes per row and inflated by operators/codec.py.  Arrow
+    batched.  At 100 TB, compressed shards arrive one per row from a
+    binaryFile scan; decompression is CPU-parallel across rows with zero
+    shuffle."""
     import pandas as pd
 
-    from .lz4 import lz4_frame_decompress
-    from .zstd import zstd_decompress
+    from .codec import decompress
+
+    magics = (
+        (b"\x1f\x8b", "gzip"),
+        (b"BZh", "bz2"),
+        (b"\xfd7zXZ\x00", "xz"),
+        (b"\x28\xb5\x2f\xfd", "zstd"),
+        (b"\x04\x22\x4d\x18", "lz4"),
+        (b"\x78", "zlib"),
+    )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for mid, raw in zip(pdf[id_col], pdf[payload_col]):
                 buf = bytes(raw)
-                if buf[:2] == b"\x1f\x8b":
-                    codec, data = "gzip", zlib.decompress(buf, 31)
-                elif buf[:3] == b"BZh":
-                    codec, data = "bz2", bz2.decompress(buf)
-                elif buf[:6] == b"\xfd7zXZ\x00":
-                    codec, data = "xz", lzma.decompress(buf)
-                elif buf[:4] == b"\x28\xb5\x2f\xfd":
-                    codec, data = "zstd", zstd_decompress(buf)
-                elif buf[:4] == b"\x04\x22\x4d\x18":
-                    codec, data = "lz4", lz4_frame_decompress(buf)
-                elif buf[:1] == b"\x78":
-                    codec, data = "zlib", zlib.decompress(buf)
-                else:
-                    codec, data = "plain", buf
+                codec = next((c for m, c in magics if buf.startswith(m)), "plain")
+                data = buf if codec == "plain" else decompress(buf, codec)
                 rows.append(
                     {
                         "media_id": int(mid),
@@ -319,18 +311,17 @@ def warc_cdx(
 def synthesize_zstd_corpus(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Per-row zstd shard over the raw document text: the store-frame
-    encoder from operators/zstd.py (single-segment frame, content size,
-    XXH64 checksum — a subset the reference CLI round-trips, see
-    tests/test_zstd.py), so decompress_text's zstd arm gets fixtures with
-    the full frame surface (FCS verify + checksum verify) exercised."""
+    """Per-row zstd shard over the raw document text, written by pyarrow's
+    bundled libzstd (one frame with its content size), so
+    decompress_text's zstd arm gets real encoder output."""
     import pandas as pd
-
-    from .zstd import zstd_compress_store
+    import pyarrow as pa
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            payloads = [zstd_compress_store(str(t).encode()) for t in pdf[text_col]]
+            payloads = [
+                pa.compress(str(t).encode(), "zstd", asbytes=True) for t in pdf[text_col]
+            ]
             yield pd.DataFrame({id_col: pdf[id_col].values, "payload": payloads})
 
     schema = T.StructType(
@@ -342,10 +333,9 @@ def synthesize_zstd_corpus(
 def synthesize_brotli_corpus(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Per-row brotli shard over the raw document text, written by the
-    REAL encoder (pyarrow's bundled libbrotli) with the quality level
-    cycling 1/5/11 by id — so the from-scratch RFC 7932 decoder
-    (operators/brotli.py) sees the fast, balanced and max-effort code
+    """Per-row brotli shard over the raw document text, written by
+    pyarrow's bundled libbrotli with the quality level cycling 1/5/11 by
+    id — so the decoder sees the fast, balanced and max-effort code
     shapes (uncompressed meta-blocks, context maps, static-dictionary
     references) rather than one encoder mode."""
     import pandas as pd
@@ -374,16 +364,16 @@ def decompress_brotli_text(
     NO magic bytes, so unlike :func:`decompress_text` the codec is keyed
     by provenance (file extension / content-encoding header), exactly as
     real crawl pipelines do — this operator is that extension-keyed path,
-    decoding every payload with the from-scratch RFC 7932 decoder."""
+    decoding every payload through operators/codec.py."""
     import pandas as pd
 
-    from .brotli import brotli_decompress
+    from .codec import decompress
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                data = brotli_decompress(bytes(raw))
+                data = decompress(raw, "brotli")
                 rows.append(
                     {
                         "media_id": int(mid),

@@ -736,15 +736,13 @@ def corpus_decompress(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_decompress_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zstandard shard decompression through the from-scratch RFC 8878
-    decoder (operators/zstd.py: FSE, Huffman, sequences, repeat offsets,
-    XXH64 checksum) — zstd is the codec modern crawl dumps and parquet
-    writers actually emit.  Fixtures are store-mode frames from the
-    minimal spec-subset encoder (reference-CLI round-trip pinned in
-    tests/test_zstd.py); the full compressed path is exercised against
-    pyarrow/CLI fixtures in the same test file.  The oracle recomputes
-    byte length and md5 from the source column, so a frame-walk, FCS or
-    checksum bug fails the hash.  Partition-parallel, zero shuffle."""
+    """Zstandard shard decompression (operators/web.py's magic dispatch,
+    inflated by pyarrow's libzstd through operators/codec.py) — zstd is
+    the codec modern crawl dumps and parquet writers actually emit.
+    Fixtures are pyarrow-encoded frames; decoding of reference-CLI frames
+    is pinned in tests/test_zstd.py.  The oracle recomputes byte length
+    and md5 from the source column, so a dispatch, frame-walk or
+    declared-size bug fails the hash.  Partition-parallel, zero shuffle."""
     from native_sql_engine_spark.operators.web import (
         decompress_text,
         synthesize_zstd_corpus,
@@ -770,17 +768,14 @@ def corpus_decompress_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_decompress_brotli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brotli shard decompression through the from-scratch RFC 7932
-    decoder (operators/brotli.py: simple+complex prefix codes, block-switch
-    machines, context modeling, the 704-symbol insert-and-copy code,
-    distance ring buffer, static dictionary with the 121 transforms).
-    Fixtures are written by the REAL encoder (pyarrow's libbrotli) with
+    """Brotli shard decompression through pyarrow's libbrotli
+    (operators/codec.py).  Fixtures are written by the same library with
     quality cycling 1/5/11 per row, so fast/balanced/max code shapes all
     flow through.  Brotli has no magic bytes, so this is the
     extension-keyed ingestion door (decompress_brotli_text), not the
     magic-dispatch one.  The oracle recomputes byte length and md5 from
-    the source column — a prefix-code, context-map or dictionary-transform
-    bug fails the hash.  Partition-parallel, zero shuffle."""
+    the source column — a truncated or mis-keyed decode fails the hash.
+    Partition-parallel, zero shuffle."""
     from native_sql_engine_spark.operators.web import (
         decompress_brotli_text,
         synthesize_brotli_corpus,
@@ -2807,10 +2802,11 @@ def source_parquet_rawread_encodings(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def source_parquet_rawread_brotli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parquet BROTLI pages (codec 4) through the from-scratch RFC 7932
-    decoder — a codec DuckDB's reader doesn't even support, so the oracle
-    aggregates the ORIGINAL snappy file and the only path to the numbers
-    is our own page walk + brotli decode.  Fixture write is a bounded
+    """Parquet BROTLI pages (codec 4) through the from-scratch page walk,
+    inflated by pyarrow's libbrotli (operators/codec.py) — a codec
+    DuckDB's reader doesn't even support, so the oracle aggregates the
+    ORIGINAL snappy file and the only path to the numbers is our own page
+    walk.  Fixture write is a bounded
     driver-side step (<4000 rows); the decode itself is partition-parallel
     mapInPandas."""
     import os
@@ -3071,9 +3067,9 @@ def source_parquet_rawread_ba_decimal(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def source_parquet_rawread_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zstd-compressed parquet read entirely from scratch: pages inflated
-    by the RFC 8878 decoder (operators/zstd.py — FSE, Huffman, sequences)
-    feeding the from-scratch page/level/dictionary reader
+    """Zstd-compressed parquet read from scratch: pages inflated by
+    pyarrow's libzstd (operators/codec.py) against each page header's
+    declared size, feeding the from-scratch page/level/dictionary reader
     (operators/parquet_data.py).  Zstd is the page codec modern Spark and
     Arrow writers emit by default on many deployments, so this closes the
     last routinely-hit codec gate.  The oracle aggregates the ORIGINAL
@@ -5290,10 +5286,11 @@ def lake_delta_column_mapping_nested_partitioned(
 )
 def source_orc_rawread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC read entirely from scratch (operators/orc.py): protobuf
-    postscript/footer/stripe-footer walk, zstd chunk framing through the
-    RFC 8878 decoder, RLEv2 integer runs (DELTA/DIRECT/PATCHED_BASE),
-    DICTIONARY_V2 strings, timestamp DATA+SECONDARY reassembly — zero ORC
-    library code touches the bytes.  The fixture is written by pyarrow's
+    postscript/footer/stripe-footer walk, zstd chunk framing (chunks
+    inflated by pyarrow's libzstd through operators/codec.py), RLEv2
+    integer runs (DELTA/DIRECT/PATCHED_BASE), DICTIONARY_V2 strings,
+    timestamp DATA+SECONDARY reassembly — zero ORC library code touches
+    the bytes.  The fixture is written by pyarrow's
     real ORC writer (zstd, forced dictionary encoding); the oracle
     aggregates the ORIGINAL parquet through DuckDB (which cannot read ORC
     at all), so the only route to matching numbers is a spec-correct
@@ -5719,15 +5716,15 @@ def source_orc_writeread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_parquet_rawread_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parquet Modular Encryption read entirely from scratch
+    """Parquet Modular Encryption read from scratch
     (operators/parquet_crypto.py): pyarrow's real encryption writer
     produces an AES_GCM_V1 encrypted-footer file (footer key + two column
     keys, random DEKs wrapped in PKMT1 key metadata); workers parse
     FileCryptoMetaData, unwrap the DEKs, authenticate + decrypt the footer,
-    ColumnMetaData, page-header and page modules with the from-scratch
-    FIPS-197 AES / SP 800-38D GCM (module AADs bind each ciphertext to its
-    file/column/page position), then the plaintext pages flow through the
-    from-scratch page reader.  The oracle aggregates the ORIGINAL
+    ColumnMetaData, page-header and page modules with AES-GCM from
+    ``cryptography`` (operators/codec.py; module AADs bind each ciphertext
+    to its file/column/page position), then the plaintext pages flow
+    through the from-scratch page reader.  The oracle aggregates the ORIGINAL
     unencrypted file through DuckDB — the only route to matching numbers is
     a spec-correct decryption stack.  Fixture write is a bounded
     driver-side step (<4000 rows); the decrypt+decode is
@@ -5909,10 +5906,10 @@ def source_parquet_rawread_encrypted_ctr(spark: SparkSession, sf_dir: str) -> Da
     """,
 )
 def source_parquet_rawread_lz4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LZ4-compressed parquet read entirely from scratch: pages inflated
-    by the block/Hadoop-framing decoder (operators/lz4.py — token-coded
-    sequences, overlapping copies, legacy BE size framing with bare-block
-    fallback) feeding the from-scratch page/level/dictionary reader.
+    """LZ4-compressed parquet read from scratch: pyarrow writes LZ4_RAW
+    pages (raw blocks; the legacy Hadoop-framed codec Spark writes reads
+    the same way), inflated by pyarrow's liblz4 (operators/codec.py) and
+    fed to the from-scratch page/level/dictionary reader.
     With snappy, gzip, zstd and lz4 the page-codec set real writers emit
     is complete.  Oracle aggregates the ORIGINAL snappy file through
     DuckDB's reader."""

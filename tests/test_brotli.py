@@ -1,6 +1,6 @@
-"""From-scratch Brotli (operators/brotli.py) — cross-validated against
-pyarrow's real libbrotli encoder across quality levels, plus the parquet
-codec-4 page path and the RFC-data embedding pins."""
+"""Brotli through operators/codec.py — libbrotli-encoded streams across
+quality levels, the malformed-input contract and the parquet codec-4
+page path."""
 
 from __future__ import annotations
 
@@ -8,7 +8,11 @@ import random
 
 import pytest
 
-from native_sql_engine_spark.operators.brotli import brotli_decompress
+from native_sql_engine_spark.operators.codec import MAX_OUTPUT, decompress
+
+
+def brotli_decompress(buf: bytes, max_output: int = MAX_OUTPUT) -> bytes:
+    return decompress(buf, "brotli", max_output=max_output)
 
 
 def _real(data: bytes, q: int = 11) -> bytes:
@@ -40,64 +44,20 @@ def test_roundtrip_matrix_vs_real_encoder():
 
 
 def test_static_dictionary_and_transforms():
-    """Short unique English at q11 forces static-dictionary word references
-    (verified via the lazily-loaded dictionary body)."""
-    import native_sql_engine_spark.operators.brotli as B
-
+    """Short unique English at q11 is encoded with static-dictionary word
+    references and their transforms."""
     text = (
         b"This is not the time for working with people from all of the "
         b"world. Technology should provide information."
     )
-    assert brotli_decompress(_real(text, 11)) == text
-    assert B._dict_body is not None, "q11 short English should hit the dictionary"
-    # transform machinery sanity: transform 0 is the bare identity; the
-    # UTF-8-aware uppercaser follows the spec's 1/2/3-byte stepping
-    word = B._dictionary()[B._DICT_OFFSETS[8] : B._DICT_OFFSETS[8] + 8]
-    assert B._transform_word(word, 0) == word
-    arr = bytearray(b"a\xc3\xa9z")  # 'a', U+00E9, 'z'
-    assert B._uppercase(arr, 0) == 1 and arr[:1] == b"A"
-    assert B._uppercase(arr, 1) == 2 and arr[1:3] == b"\xc3\x89"  # U+00C9
-
-
-def test_embedded_tables_match_system_library():
-    """The embedded RFC appendix tables (context LUT, transform triples,
-    dictionary geometry) must equal libbrotlicommon's copies."""
-    import ctypes
-    import glob
-
-    import native_sql_engine_spark.operators.brotli as B
-
-    libs = sorted(
-        glob.glob("/root/miniconda/lib/libbrotlicommon.so*")
-        + glob.glob("/usr/lib/*/libbrotlicommon.so*")
-    )
-    if not libs:
-        pytest.skip("no libbrotlicommon on this host")
-    lib = ctypes.CDLL(libs[0])
-    clut = bytes((ctypes.c_uint8 * 2048).in_dll(lib, "_kBrotliContextLookupTable"))
-    assert clut == B._CLUT
-
-    class _T(ctypes.Structure):
-        _fields_ = [
-            ("prefix_suffix_size", ctypes.c_uint16),
-            ("prefix_suffix", ctypes.POINTER(ctypes.c_uint8)),
-            ("prefix_suffix_map", ctypes.POINTER(ctypes.c_uint16)),
-            ("num_transforms", ctypes.c_uint32),
-            ("transforms", ctypes.POINTER(ctypes.c_uint8)),
-            ("params", ctypes.POINTER(ctypes.c_uint8)),
-            ("cutOffTransforms", ctypes.c_int16 * 10),
-        ]
-
-    lib.BrotliGetTransforms.restype = ctypes.POINTER(_T)
-    t = lib.BrotliGetTransforms().contents
-    assert t.num_transforms == B._NUM_TRANSFORMS == 121
-    assert bytes(t.transforms[i] for i in range(121 * 3)) == B._TRIPLES
-    assert bytes(t.prefix_suffix[i] for i in range(t.prefix_suffix_size)) == B._PS
+    z = _real(text, 11)
+    assert len(z) < len(text) // 2  # dictionary references shrink it below half
+    assert brotli_decompress(z) == text
 
 
 def test_malformed_inputs_raise_value_error():
     z = _real(b"hello world")
-    with pytest.raises(ValueError, match="trailing"):
+    with pytest.raises(ValueError):  # trailing bytes
         brotli_decompress(z + b"zz")
     with pytest.raises(ValueError):
         brotli_decompress(_real(open("README.md", "rb").read())[:40])

@@ -1,5 +1,5 @@
-"""From-scratch Parquet Modular Encryption (operators/parquet_crypto.py):
-AES/GCM primitives pinned to FIPS-197 + NIST SP 800-38D vectors, all three
+"""Parquet Modular Encryption (operators/parquet_crypto.py): the cipher
+helpers in operators/codec.py pinned to NIST SP 800-38D vectors, all three
 file layouts read against pyarrow's real encryption writer, tamper/move
 detection, and our own fixture writer decrypted by pyarrow's C++ reader.
 Reference parity: the oap-project reference scans parquet through Arrow,
@@ -14,10 +14,13 @@ import struct
 
 import pytest
 
+from native_sql_engine_spark.operators.codec import (
+    ctr_decrypt,
+    gcm_decrypt,
+    gcm_encrypt,
+)
 from native_sql_engine_spark.operators.parquet_crypto import (
     FileCrypto,
-    aes_gcm_decrypt,
-    aes_gcm_encrypt,
     decrypt_module,
     module_aad,
     read_encrypted_column,
@@ -116,26 +119,7 @@ EXPECT = {
 }
 
 
-# -- AES / GCM primitive pins ---------------------------------------------------------
-
-
-def test_aes_fips197_appendix_vectors():
-    from native_sql_engine_spark.operators.parquet_crypto import (
-        _encrypt_block,
-        _expand_key,
-    )
-
-    # FIPS-197 appendix C block-cipher known answers
-    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    cases = {
-        bytes.fromhex("000102030405060708090a0b0c0d0e0f"): "69c4e0d86a7b0430d8cdb78070b4c55a",
-        bytes.fromhex("000102030405060708090a0b0c0d0e0f1011121314151617"): "dda97ca4864cdfe06eaf70a0ec0d7191",
-        bytes.fromhex(
-            "000102030405060708090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f"
-        ): "8ea2b7ca516745bfeafc49904b496089",
-    }
-    for key, want in cases.items():
-        assert _encrypt_block(_expand_key(key), pt).hex() == want
+# -- GCM / CTR cipher pins -------------------------------------------------------------
 
 
 @pytest.mark.parametrize(
@@ -166,20 +150,33 @@ def test_aes_fips197_appendix_vectors():
 )
 def test_gcm_nist_vectors(key_hex, iv_hex, pt_hex, aad_hex, ct_hex, tag_hex):
     key, iv, pt, aad = (bytes.fromhex(h) for h in (key_hex, iv_hex, pt_hex, aad_hex))
-    ct, tag = aes_gcm_encrypt(key, iv, pt, aad)
+    ct, tag = gcm_encrypt(key, iv, pt, aad)
     assert ct.hex() == ct_hex and tag.hex() == tag_hex
-    assert aes_gcm_decrypt(key, iv, ct, tag, aad) == pt
+    assert gcm_decrypt(key, iv, ct, tag, aad) == pt
 
 
 def test_gcm_rejects_tamper_and_wrong_aad():
     key, iv = bytes(16), bytes(12)
-    ct, tag = aes_gcm_encrypt(key, iv, b"secret payload", b"position")
+    ct, tag = gcm_encrypt(key, iv, b"secret payload", b"position")
     with pytest.raises(ValueError, match="tag mismatch"):
-        aes_gcm_decrypt(key, iv, ct, tag, b"other position")
+        gcm_decrypt(key, iv, ct, tag, b"other position")
     with pytest.raises(ValueError, match="tag mismatch"):
-        aes_gcm_decrypt(key, iv, bytes([ct[0] ^ 1]) + ct[1:], tag, b"position")
+        gcm_decrypt(key, iv, bytes([ct[0] ^ 1]) + ct[1:], tag, b"position")
     with pytest.raises(ValueError, match="tag mismatch"):
-        aes_gcm_decrypt(bytes(range(16)), iv, ct, tag, b"position")
+        gcm_decrypt(bytes(range(16)), iv, ct, tag, b"position")
+
+
+def test_ctr_keystream_starts_one_block_before_gcm():
+    """AES_GCM_CTR_V1 page modules start the keystream at counter 1; GCM
+    encrypts from counter 2.  So CTR over one block of zeros plus the GCM
+    ciphertext yields that block's keystream plus the NIST plaintext."""
+    key = bytes.fromhex("feffe9928665731c6d6a8f9467308308")
+    iv = bytes.fromhex("cafebabefacedbaddecaf888")
+    pt = bytes.fromhex("d9313225f88406e5a55909c5aff5269a86a7a9531534f7da2e4c303d8a318a72")
+    ct, _ = gcm_encrypt(key, iv, pt)
+    assert ctr_decrypt(key, iv, bytes(16) + ct)[16:] == pt
+    with pytest.raises(ValueError):
+        ctr_decrypt(key, iv[:8], ct)
 
 
 def test_module_framing_errors():

@@ -19,6 +19,8 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
+from tests.test_codec import CODECS, encode
+
 _SETTINGS = dict(
     max_examples=5,
     deadline=None,
@@ -736,25 +738,33 @@ def test_warc_roundtrip_property(n_rec, gz, body):
 @settings(**{**_SETTINGS, "max_examples": 25})
 def test_zstd_decode_matches_reference_compressor(data, level):
     """Any payload pyarrow's zstd emits at any level decodes byte-exactly
-    through the from-scratch RFC 8878 decoder (operators/zstd.py)."""
+    through operators/codec.py, with and without the declared size."""
     import pyarrow as pa
 
-    from native_sql_engine_spark.operators.zstd import zstd_decompress
+    from native_sql_engine_spark.operators.codec import decompress
 
     z = pa.Codec("zstd", compression_level=level).compress(data, asbytes=True)
-    assert zstd_decompress(z) == data
+    assert decompress(z, "zstd") == data
+    assert decompress(z, "zstd", size=len(data)) == data
 
 
-@given(data=st.binary(max_size=200_000))
-@settings(**{**_SETTINGS, "max_examples": 15})
-def test_zstd_store_encoder_roundtrip_property(data):
-    from native_sql_engine_spark.operators.zstd import (
-        zstd_compress_store,
-        zstd_decompress,
-    )
+@given(
+    data=st.binary(max_size=100_000),
+    codec=st.sampled_from(CODECS),
+)
+@settings(**{**_SETTINGS, "max_examples": 40})
+def test_codec_roundtrip_property(data, codec):
+    """Every codec arm decodes what its encoder wrote, to the declared
+    size, and rejects a declared size one byte off."""
+    import pytest
 
-    assert zstd_decompress(zstd_compress_store(data)) == data
-    assert zstd_decompress(zstd_compress_store(data, checksum=False)) == data
+    from native_sql_engine_spark.operators.codec import decompress
+
+    z = encode(codec, data)
+    assert decompress(z, codec) == data
+    assert decompress(z, codec, size=len(data)) == data
+    with pytest.raises(ValueError):
+        decompress(z, codec, size=len(data) + 1)
 
 
 @given(
